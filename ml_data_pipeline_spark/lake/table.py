@@ -216,6 +216,22 @@ def _schema_fp(schema: T.StructType) -> str:
     ).hexdigest()[:12]
 
 
+def _next_snapshot(head: Snapshot, schema_json: dict) -> Snapshot:
+    """The uncommitted successor of ``head``: its files, schemas,
+    watermarks and properties copied, ``schema_json`` as the schema."""
+    return Snapshot(
+        snapshot_id=head.snapshot_id + 1,
+        parent_id=head.snapshot_id,
+        schema_json=schema_json,
+        key_col=head.key_col,
+        n_buckets=head.n_buckets,
+        files=list(head.files),
+        schemas=dict(head.schemas),
+        watermarks=dict(head.watermarks),
+        properties=dict(head.properties),
+    )
+
+
 class LakeTable:
     """Snapshot-isolated, bucketed, merge-on-read upsert table."""
 
@@ -669,82 +685,72 @@ class LakeTable:
         return out
 
     @staticmethod
-    def _reduce_latest(df: DataFrame, key_col: str) -> DataFrame:
-        """Per-key last-write-wins by max ``_seq``.
+    def _reduce_latest(
+        df: DataFrame, snap: Snapshot, salt_col: str | None = None
+    ) -> DataFrame:
+        """Per-key resolve: the max-``_seq`` event wins.
 
         Uses ``groupBy + max(struct(_seq, ...))`` rather than a window
         ``row_number``: struct-max is partially aggregable, so Spark
         combines map-side before the shuffle — a hot key collapses to
         one row per map task instead of shipping every version to a
         single reducer. This is the skew-proof reduction primitive.
-        """
-        other = [c for c in df.columns if c not in (key_col, SEQ_COL)]
-        packed = df.groupBy(key_col).agg(
-            F.max(F.struct(SEQ_COL, *other)).alias("_p")
-        )
-        return packed.select(
-            key_col,
-            *[F.col(f"_p.{c}").alias(c) for c in other],
-            F.col(f"_p.{SEQ_COL}").alias(SEQ_COL),
-        )
 
-    @staticmethod
-    def _reduce_latest_patch(
-        df: DataFrame,
-        key_col: str,
-        payload: Sequence[str],
-        salt_col: str | None = None,
-    ) -> DataFrame:
-        """LWW-per-column reduce for patch-enabled tables.
-
-        Semantics (exactly ordered-replay): per key, the max-``_seq``
-        FULL event is the base row (patch-carrier rows sit at
-        ``CARRIER_SEQ`` and lose to any full event); per payload
-        column, the max patch-seq overlay applies iff its seq beats the
-        base's. Deletes win as base (a patch never resurrects a row),
-        but surviving overlays are RETAINED on tombstones so an
-        out-of-order full event arriving later is still patched.
+        Patch-enabled tables add one overlay per payload column
+        (exactly ordered-replay LWW per column): the max-``_seq`` FULL
+        event is the base row (patch-carrier rows sit at
+        ``CARRIER_SEQ`` and lose to any full event); a column's max
+        patch-seq overlay applies iff its seq beats the base's. Deletes
+        win as base (a patch never resurrects a row), but surviving
+        overlays are RETAINED on tombstones so an out-of-order full
+        event arriving later is still patched.
 
         Everything is a max — partially aggregable and a semilattice
-        (the reduce's output rows are valid inputs), so map-side
-        combine, salting, and cross-batch/compaction merging all
-        compose exactly.
+        (the output rows are valid inputs) — so map-side combine,
+        cross-batch and compaction merging compose exactly, and salting
+        is one more group key followed by a second reduce by key.
         """
-        base = F.max(F.struct(SEQ_COL, *payload, DELETED_COL)).alias("_b")
-        overlays = [
-            F.max(
-                F.when(
-                    F.col(PS_PREFIX + c).isNotNull(),
-                    F.struct(
-                        F.col(PS_PREFIX + c).alias("ps"), F.col(c).alias("v")
-                    ),
-                )
-            ).alias(f"_o_{c}")
-            for c in payload
-        ]
-        group = [key_col] if salt_col is None else [key_col, salt_col]
-        packed = df.groupBy(*group).agg(base, *overlays)
+        key = snap.key_col
+        payload = snap.payload_cols()
+        overlays = payload if snap.patch_enabled else []
+        group = [key] if salt_col is None else [key, salt_col]
+        packed = df.groupBy(*group).agg(
+            F.max(F.struct(SEQ_COL, *payload, DELETED_COL)).alias("_b"),
+            *[
+                F.max(
+                    F.when(
+                        F.col(PS_PREFIX + c).isNotNull(),
+                        F.struct(
+                            F.col(PS_PREFIX + c).alias("ps"), F.col(c).alias("v")
+                        ),
+                    )
+                ).alias(f"_o_{c}")
+                for c in overlays
+            ],
+        )
         fseq = F.col(f"_b.{SEQ_COL}")
         deleted = F.col(f"_b.{DELETED_COL}")
         out_vals, out_ps = [], []
         for c in payload:
-            o = F.col(f"_o_{c}")
-            applied = o.isNotNull() & (o["ps"] > fseq)
-            out_vals.append(
-                F.when(applied, o["v"])
-                .otherwise(
-                    F.when(deleted, F.lit(None)).otherwise(F.col(f"_b.{c}"))
+            v = F.col(f"_b.{c}")
+            if c in overlays:
+                o = F.col(f"_o_{c}")
+                applied = o.isNotNull() & (o["ps"] > fseq)
+                v = F.when(applied, o["v"]).otherwise(
+                    F.when(deleted, F.lit(None)).otherwise(v)
                 )
-                .alias(c)
-            )
-            out_ps.append(F.when(applied, o["ps"]).alias(PS_PREFIX + c))
-        return packed.select(
-            key_col,
+                out_ps.append(F.when(applied, o["ps"]).alias(PS_PREFIX + c))
+            out_vals.append(v.alias(c))
+        out = packed.select(
+            key,
             *out_vals,
             fseq.alias(SEQ_COL),
             deleted.alias(DELETED_COL),
             *out_ps,
         )
+        if salt_col is not None:
+            return LakeTable._reduce_latest(out, snap)
+        return out
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
         path = os.path.join(self.meta_dir, f"snapshot-{snapshot_id}.json")
@@ -779,15 +785,7 @@ class LakeTable:
             bexpr = self.bucket_expr(snap=snap)
             need = raw.where(bexpr.isin([int(b) for b in delta_buckets]))
             done = raw.where(~bexpr.isin([int(b) for b in delta_buckets]))
-            if snap.patch_enabled:
-                red = self._reduce_latest_patch(
-                    need,
-                    snap.key_col,
-                    [f.name for f in snap.schema.fields if f.name != snap.key_col],
-                )
-            else:
-                red = self._reduce_latest(need, snap.key_col)
-            reduced = red.unionByName(done)
+            reduced = self._reduce_latest(need, snap).unionByName(done)
         else:
             reduced = raw
         live = reduced.where(~F.col(DELETED_COL))
@@ -858,12 +856,7 @@ class LakeTable:
         raw = self.scan_files(files=cand, snap=snap).where(
             F.col(snap.key_col) == F.lit(key_value)
         )
-        if snap.patch_enabled:
-            red = self._reduce_latest_patch(
-                raw, snap.key_col, snap.payload_cols()
-            )
-        else:
-            red = self._reduce_latest(raw, snap.key_col)
+        red = self._reduce_latest(raw, snap)
         return red.where(~F.col(DELETED_COL)).select(*snap.schema.fieldNames())
 
     def _version_expr(self, snap: Snapshot):
@@ -874,8 +867,7 @@ class LakeTable:
             return F.col(SEQ_COL)
         parts = [F.col(SEQ_COL)] + [
             F.coalesce(F.col(PS_PREFIX + c), F.lit(CARRIER_SEQ))
-            for c in snap.schema.fieldNames()
-            if c != snap.key_col
+            for c in snap.payload_cols()
         ]
         return F.greatest(*parts) if len(parts) > 1 else parts[0]
 
@@ -932,7 +924,7 @@ class LakeTable:
             ) from None
         base_paths = {f.path for f in base.files}
         added = [f for f in snap.files if f.path not in base_paths]
-        payload = [f.name for f in snap.schema.fields if f.name != snap.key_col]
+        payload = snap.payload_cols()
         out_schema = T.StructType(
             [T.StructField("op", T.StringType())]
             + list(snap.storage_schema().fields)
@@ -949,11 +941,6 @@ class LakeTable:
         if not added:
             return self.spark.createDataFrame([], out_schema)
 
-        def _reduce(df: DataFrame) -> DataFrame:
-            if snap.patch_enabled:
-                return self._reduce_latest_patch(df, snap.key_col, payload)
-            return self._reduce_latest(df, snap.key_col)
-
         touched = set()
         for f in added:
             touched.add(f.bucket)
@@ -963,9 +950,11 @@ class LakeTable:
         # (snap.schemas keeps every historical fingerprint), so both
         # sides align even across mid-window schema evolution.
         base_files = [f for f in base.files if f.bucket in touched]
-        base_state = _reduce(self.scan_files(files=base_files, snap=snap))
+        base_state = self._reduce_latest(
+            self.scan_files(files=base_files, snap=snap), snap
+        )
         win = self.scan_files(files=added, snap=snap)
-        new_state = _reduce(base_state.unionByName(win))
+        new_state = self._reduce_latest(base_state.unionByName(win), snap)
         ver = self._version_expr(snap)
         old_cols = []
         if include_old:
@@ -1005,6 +994,31 @@ class LakeTable:
     def already_applied(self, stream_id: str, batch_id: int) -> bool:
         wm = self.snapshot.watermarks.get(stream_id)
         return wm is not None and batch_id <= wm
+
+    @staticmethod
+    def _reason_expr(
+        snap: Snapshot, columns: Sequence[str], seq_col: str, op_col: str
+    ):
+        """The quarantine rule: why an event is invalid (null = valid)."""
+        ops = ("I", "U", "D", "P") if snap.patch_enabled else ("I", "U", "D")
+        reason = (
+            F.when(F.col(snap.key_col).isNull(), "null_key")
+            .when(F.col(seq_col).isNull(), "null_seq")
+            # NULL op must be its own branch: ~isin(...) is NULL
+            # (not true) for NULL, which would let the row through
+            # with _deleted=NULL and silently vanish from reads.
+            .when(F.col(op_col).isNull(), "null_op")
+            .when(~F.col(op_col).isin(*ops), "bad_op")
+        )
+        if "tokens" in columns and "n_tok" in columns:
+            reason = reason.when(
+                (F.col(op_col) != "D")
+                & F.col("tokens").isNotNull()
+                & F.col("n_tok").isNotNull()
+                & (F.col("n_tok") != F.size("tokens")),
+                "n_tok_mismatch",
+            )
+        return reason
 
     def merge_batch(
         self,
@@ -1046,8 +1060,6 @@ class LakeTable:
         # instance last looked — building on a stale snapshot would
         # fork history and clobber those commits.
         snap = self.refresh()
-        patch_mode = snap.properties.get(PATCH_PROP) == "true"
-        allowed_ops = ("I", "U", "D", "P") if patch_mode else ("I", "U", "D")
         if batch_id is not None and self.already_applied(stream_id, batch_id):
             return {
                 "skipped": True,
@@ -1064,6 +1076,12 @@ class LakeTable:
         merged = merge_schemas(snap.schema, incoming)
         evolved = merged != snap.schema
         schema_after = merged if evolved else snap.schema
+        # The in-flight snapshot. self._snapshot is NOT touched until
+        # _write_snapshot's atomic pointer swap succeeds — if the delta
+        # write, compaction, or snapshot write fails, the in-memory
+        # table still points at the last committed snapshot and a retry
+        # builds on real state.
+        new_snap = _next_snapshot(snap, schema_after.jsonValue())
 
         # --- bad-record quarantine (reference C1: corrupt-record
         # detection, ml-data-readers/src/binary.rs:238-270) -------------
@@ -1074,23 +1092,7 @@ class LakeTable:
         obs = None
         events_orig = events
         if quarantine:
-            reason = (
-                F.when(F.col(snap.key_col).isNull(), "null_key")
-                .when(F.col(seq_col).isNull(), "null_seq")
-                # NULL op must be its own branch: ~isin(...) is NULL
-                # (not true) for NULL, which would let the row through
-                # with _deleted=NULL and silently vanish from reads.
-                .when(F.col(op_col).isNull(), "null_op")
-                .when(~F.col(op_col).isin(*allowed_ops), "bad_op")
-            )
-            if "tokens" in events.columns and "n_tok" in events.columns:
-                reason = reason.when(
-                    (F.col(op_col) != "D")
-                    & F.col("tokens").isNotNull()
-                    & F.col("n_tok").isNotNull()
-                    & (F.col("n_tok") != F.size("tokens")),
-                    "n_tok_mismatch",
-                )
+            reason = self._reason_expr(snap, events.columns, seq_col, op_col)
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -1101,146 +1103,46 @@ class LakeTable:
             )
             events = events.where(F.col("_reason").isNull()).drop("_reason")
 
-        # --- per-batch resolution (max-seq wins inside the batch) -------
+        # --- one storage row per event -----------------------------------
+        # I/U/D are full events at their seq; a delete nulls the payload
+        # so tombstones carry no stale data. A patch (op P, patch tables
+        # only) is a carrier row at CARRIER_SEQ — it loses to any full
+        # event as base, and _deleted=true so an all-patch history
+        # materializes no row — whose _ps_<c> holds its seq for every
+        # column it sets.
         have = {f.name for f in payload_fields}
-
-        def _cast_cols(src_has: set) -> list:
-            cols = []
-            for f_ in schema_after.fields:
-                if f_.name in src_has:
-                    cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-                else:
-                    cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-            return cols
-
-        payload_names = [
-            f.name for f in schema_after.fields if f.name != snap.key_col
-        ]
-        if patch_mode:
-            # Full events (I/U/D): ordinary rows, no overlays.
-            fulls = (
-                events.where(F.col(op_col) != "P")
-                .withColumn(SEQ_COL, F.col(seq_col).cast("long"))
-                .withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-                .select(*_cast_cols(have), SEQ_COL, DELETED_COL)
+        op = F.col(op_col)
+        seq = F.col(seq_col).cast("long")
+        is_patch = (op == "P") if snap.patch_enabled else F.lit(False)
+        cols, ps = [], {}
+        for f_ in schema_after.fields:
+            v = (F.col(f_.name) if f_.name in have else F.lit(None)).cast(
+                f_.dataType
             )
-            nulled = []
-            for f_ in schema_after.fields:
-                if f_.name == snap.key_col:
-                    nulled.append(F.col(f_.name))
-                else:
-                    nulled.append(
-                        F.when(F.col(DELETED_COL), F.lit(None).cast(f_.dataType))
-                        .otherwise(F.col(f_.name))
-                        .alias(f_.name)
-                    )
-            fulls = fulls.select(
-                *nulled,
-                SEQ_COL,
-                DELETED_COL,
-                *[
-                    F.lit(None).cast("long").alias(PS_PREFIX + c)
-                    for c in payload_names
-                ],
-            )
-            # Patch events: carrier rows at CARRIER_SEQ (lose to any
-            # full event as base; _deleted=true so an all-patch history
-            # materializes no row) carrying per-column overlay seqs.
-            psrc = events.where(F.col(op_col) == "P")
-            pseq = F.col(seq_col).cast("long")
-            ps_cols = [
-                F.when(F.col(c).isNotNull(), pseq).alias(PS_PREFIX + c)
-                if c in have
-                else F.lit(None).cast("long").alias(PS_PREFIX + c)
-                for c in payload_names
-            ]
-            patches = psrc.select(
-                *_cast_cols(have),
-                F.lit(CARRIER_SEQ).cast("long").alias(SEQ_COL),
-                F.lit(True).alias(DELETED_COL),
-                *ps_cols,
-            )
-            ev = fulls.unionByName(patches)
-            if salt:
-                # The patch reduce is a semilattice: reduce (key, salt)
-                # then reduce key — exact split.
-                salted = ev.withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64(
-                            F.col(SEQ_COL),
-                            *[F.col(PS_PREFIX + c) for c in payload_names],
-                        ),
-                        F.lit(salt),
-                    ),
-                )
-                phase1 = self._reduce_latest_patch(
-                    salted, snap.key_col, payload_names, salt_col="_salt"
-                )
-                resolved = self._reduce_latest_patch(
-                    phase1, snap.key_col, payload_names
-                )
-            else:
-                resolved = self._reduce_latest_patch(
-                    ev, snap.key_col, payload_names
-                )
-        else:
-            ev = events.withColumn(
-                SEQ_COL, F.col(seq_col).cast("long")
-            ).withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-            ev = ev.select(*_cast_cols(have), SEQ_COL, DELETED_COL)
-            # Null out payload on deletes so tombstones carry no stale data.
-            payload_cols = []
-            for f_ in schema_after.fields:
-                if f_.name == snap.key_col:
-                    payload_cols.append(F.col(f_.name))
-                else:
-                    payload_cols.append(
-                        F.when(F.col(DELETED_COL), F.lit(None).cast(f_.dataType))
-                        .otherwise(F.col(f_.name))
-                        .alias(f_.name)
-                    )
-            ev = ev.select(*payload_cols, SEQ_COL, DELETED_COL)
-            if salt:
-                # Two-phase salted reduce for pathologically hot keys: the
-                # salt spreads one key over `salt` reducers, then a second
-                # tiny reduce finishes. max-by-seq is associative, so the
-                # split is exact.
-                salted = ev.withColumn(
-                    "_salt", F.pmod(F.xxhash64(F.col(SEQ_COL)), F.lit(salt))
-                )
-                other = [c for c in ev.columns if c not in (snap.key_col, SEQ_COL)]
-                phase1 = salted.groupBy(snap.key_col, "_salt").agg(
-                    F.max(F.struct(SEQ_COL, *other)).alias("_p")
-                )
-                resolved = (
-                    phase1.groupBy(snap.key_col)
-                    .agg(F.max("_p").alias("_p"))
-                    .select(
-                        snap.key_col,
-                        *[F.col(f"_p.{c}").alias(c) for c in other],
-                        F.col(f"_p.{SEQ_COL}").alias(SEQ_COL),
-                    )
-                )
-            else:
-                resolved = self._reduce_latest(ev, snap.key_col)
-
-        # --- evolve schema on the in-flight snapshot ---------------------
-        # NOTE: self._snapshot is NOT touched until _write_snapshot's
-        # atomic pointer swap succeeds — if the delta write, compaction,
-        # or snapshot write fails, the in-memory table still points at
-        # the last committed snapshot and a retry builds on real state.
-        new_snap = Snapshot(
-            snapshot_id=snap.snapshot_id + 1,
-            parent_id=snap.snapshot_id,
-            schema_json=schema_after.jsonValue(),
-            key_col=snap.key_col,
-            n_buckets=snap.n_buckets,
-            files=list(snap.files),
-            schemas=dict(snap.schemas),
-            watermarks=dict(snap.watermarks),
-            properties=dict(snap.properties),
+            if f_.name == snap.key_col:
+                cols.append(v.alias(f_.name))
+                continue
+            cols.append(F.when(op == "D", F.lit(None)).otherwise(v).alias(f_.name))
+            if snap.patch_enabled:
+                ps[PS_PREFIX + f_.name] = F.when(is_patch & v.isNotNull(), seq)
+        ev = events.select(
+            *cols,
+            F.when(is_patch, F.lit(CARRIER_SEQ)).otherwise(seq).alias(SEQ_COL),
+            ((op == "D") | is_patch).alias(DELETED_COL),
+            *[e.alias(n) for n, e in ps.items()],
         )
+
+        # --- per-batch resolution (max-seq wins inside the batch) -------
+        salt_col = None
+        if salt:
+            # Hot-key defense: the salt spreads one key over `salt`
+            # reducers, then a second tiny reduce by key finishes. The
+            # reduce is a semilattice, so the split is exact.
+            salt_col = "_salt"
+            ev = ev.withColumn(
+                salt_col, F.pmod(F.xxhash64(SEQ_COL, *ps), F.lit(salt))
+            )
+        resolved = self._reduce_latest(ev, new_snap, salt_col)
 
         # --- append delta files ------------------------------------------
         # Single action: resolved flows straight into the delta write
@@ -1300,17 +1202,7 @@ class LakeTable:
                 schema_after = merge_schemas(head.schema, schema_after)
                 evolved = schema_after != head.schema or evolved
                 base_snap = head
-                new_snap = Snapshot(
-                    snapshot_id=head.snapshot_id + 1,
-                    parent_id=head.snapshot_id,
-                    schema_json=schema_after.jsonValue(),
-                    key_col=head.key_col,
-                    n_buckets=head.n_buckets,
-                    files=[],
-                    schemas=dict(head.schemas),
-                    watermarks=dict(head.watermarks),
-                    properties=dict(head.properties),
-                )
+                new_snap = _next_snapshot(head, schema_after.jsonValue())
         if not committed:
             raise CommitConflict(
                 "merge_batch lost 5 consecutive commit races — check for a "
@@ -1325,25 +1217,8 @@ class LakeTable:
             events_in = int(got.get("events_in") or 0)
             events_invalid = int(got.get("events_invalid") or 0)
             if events_invalid > 0:
-                reason2 = (
-                    F.when(F.col(snap.key_col).isNull(), "null_key")
-                    .when(F.col(seq_col).isNull(), "null_seq")
-                    .when(F.col(op_col).isNull(), "null_op")
-                    .when(~F.col(op_col).isin(*allowed_ops), "bad_op")
-                )
-                if (
-                    "tokens" in events_orig.columns
-                    and "n_tok" in events_orig.columns
-                ):
-                    reason2 = reason2.when(
-                        (F.col(op_col) != "D")
-                        & F.col("tokens").isNotNull()
-                        & F.col("n_tok").isNotNull()
-                        & (F.col("n_tok") != F.size("tokens")),
-                        "n_tok_mismatch",
-                    )
                 (
-                    events_orig.withColumn("_reason", reason2)
+                    events_orig.withColumn("_reason", reason)
                     .where(F.col("_reason").isNotNull())
                     .withColumn("_batch_id", F.lit(batch_id).cast("long"))
                     .withColumn("_stream_id", F.lit(stream_id))
@@ -1383,35 +1258,18 @@ class LakeTable:
         victims = [f for f in snap.files if f.bucket in bset]
         if not victims:
             return
-        raw = self.scan_files(files=victims, snap=snap)
-        if snap.patch_enabled:
-            payload = [
-                f.name for f in snap.schema.fields if f.name != snap.key_col
-            ]
-            reduced = self._reduce_latest_patch(raw, snap.key_col, payload)
-            if gc_before_seq is not None:
-                # Keep tombstones whose base OR any overlay is at/after
-                # the watermark (a patch-carrier tombstone still guards
-                # its overlays for a late full event).
-                ps_vals = [
-                    F.coalesce(F.col(PS_PREFIX + c), F.lit(CARRIER_SEQ))
-                    for c in payload
-                ]
-                live_ps = (
-                    F.greatest(*ps_vals) if len(ps_vals) > 1 else ps_vals[0]
-                )
-                reduced = reduced.where(
-                    (~F.col(DELETED_COL))
-                    | (F.col(SEQ_COL) >= F.lit(gc_before_seq))
-                    | (live_ps >= F.lit(gc_before_seq))
-                )
-        else:
-            reduced = self._reduce_latest(raw, snap.key_col)
-            if gc_before_seq is not None:
-                reduced = reduced.where(
-                    (~F.col(DELETED_COL))
-                    | (F.col(SEQ_COL) >= F.lit(gc_before_seq))
-                )
+        reduced = self._reduce_latest(
+            self.scan_files(files=victims, snap=snap), snap
+        )
+        if gc_before_seq is not None:
+            # Keep tombstones whose version (base seq or, on patch
+            # tables, any overlay seq) is at/after the watermark: a
+            # patch-carrier tombstone still guards its overlays for a
+            # late full event.
+            reduced = reduced.where(
+                ~F.col(DELETED_COL)
+                | (self._version_expr(snap) >= F.lit(gc_before_seq))
+            )
         new_files = self._write_files(reduced, kind="base", snap=snap)
         fp = _schema_fp(snap.storage_schema())
         snap.schemas[fp] = snap.storage_schema().jsonValue()
@@ -1441,17 +1299,7 @@ class LakeTable:
                 if buckets is None
                 else list(buckets)
             )
-            new_snap = Snapshot(
-                snapshot_id=snap.snapshot_id + 1,
-                parent_id=snap.snapshot_id,
-                schema_json=snap.schema_json,
-                key_col=snap.key_col,
-                n_buckets=snap.n_buckets,
-                files=list(snap.files),
-                schemas=dict(snap.schemas),
-                watermarks=dict(snap.watermarks),
-                properties=dict(snap.properties),
-            )
+            new_snap = _next_snapshot(snap, snap.schema_json)
             self._compact_into(new_snap, bs, gc_before_seq)
             new_snap.summary = {
                 "operation": "compact",

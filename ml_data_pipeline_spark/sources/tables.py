@@ -46,6 +46,9 @@ SPREAD_TARGET_FILE_BYTES = int(
 
 
 def _input_bytes(sf_dir: str, name: str) -> int:
+    """Compressed on-disk size of the table's parquet file or directory.
+    The probe reads the local filesystem, so it assumes ``sf_dir`` is a
+    local path (a remote URI reads as 0 bytes)."""
     p = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isfile(p):
         return os.path.getsize(p)
@@ -64,7 +67,9 @@ def _effective_scan_parallelism(sf_dir: str, name: str) -> int:
     data files for a directory, number of row groups for a single
     file (one cheap footer read). Spark's split count is NOT usable
     here — minPartitionNum inflates it with empty splits while the
-    row group remains the real unit."""
+    row group remains the real unit. Like ``_input_bytes`` it probes
+    the local filesystem, so it assumes ``sf_dir`` is a local path (a
+    remote URI falls through to the unsplittable default, 1)."""
     p = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isdir(p):
         return sum(

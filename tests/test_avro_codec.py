@@ -59,6 +59,21 @@ def test_empty_file_and_corrupt_sync():
         read_avro_bytes(b"PAR1xxxx", SCHEMA)
 
 
+def test_short_sync_marker_raises_from_both_writers():
+    """The caller's sync marker is checked by a real raise, not an
+    assert (which ``python -O`` strips)."""
+    import pandas as pd
+
+    from ml_data_pipeline_spark.sources.avro import write_avro_pandas
+
+    short = b"x" * 15
+    with pytest.raises(ValueError, match="16 bytes"):
+        write_avro_bytes([(1, "x", 1.0, True, [1])], SCHEMA, short)
+    schema = T.StructType([T.StructField("a", T.LongType())])
+    with pytest.raises(ValueError, match="16 bytes"):
+        write_avro_pandas(pd.DataFrame({"a": [1, 2]}), schema, short)
+
+
 def test_numpy_block_encoder_byte_identical_to_row_loop():
     """Round-6: the vectorized block encoder must produce BYTE-FOR-BYTE
     the row loop's container output — nullable unions, zigzag varints,

@@ -230,18 +230,22 @@ def test_quarantine_bad_records(spark, tmp_path):
         (102, "I", None, [1], 1, "web", None),           # null key
         (103, "I", "mismatch", [1, 2, 3], 99, "web", None),  # n_tok wrong
         (104, "I", "ok2", [5], 1, "web", None),
+        (None, "I", "nullseq", [1], 1, "web", None),     # null seq
+        # null op: ~isin(...) is NULL for it, so only its own branch
+        # keeps it out of the table
+        (105, None, "nullop", [1], 1, "web", None),
     ]
     loose = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields]
     )
     res = t.merge_batch(spark.createDataFrame(bad, loose), batch_id=0)
-    assert res["events_in"] == 5 and res["events_invalid"] == 3
+    assert res["events_in"] == 7 and res["events_invalid"] == 5
     live = {r["doc_id"] for r in t.read().collect()}
     assert live == {"ok1", "ok2"}
     q = spark.read.parquet(str(tmp_path / "tbl" / "quarantine"))
     reasons = {r["_reason"] for r in q.collect()}
-    assert reasons == {"bad_op", "null_key", "n_tok_mismatch"}
-    assert q.count() == 3
+    assert reasons == {"bad_op", "null_key", "n_tok_mismatch", "null_seq", "null_op"}
+    assert q.count() == 5
     # clean batch: no quarantine write, counters still observed
     res2 = t.merge_batch(
         _events(spark, [(200, "U", "ok1", [9], 1, "web", None)]), batch_id=1

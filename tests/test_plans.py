@@ -173,9 +173,11 @@ def test_spread_skips_already_splittable_inputs(spark, tmp_path):
         spread_partitions,
     )
 
-    # single file, MANY row groups >= any spread width we'd pick
-    n_rg = 200
-    tbl = pa.table({"doc_id": list(range(2000)), "text": ["x" * 2000] * 2000})
+    # single file, MANY row groups >= any spread width we'd pick (the
+    # width caps at 3 waves per core, so the count follows the host)
+    n_rg = max(200, 3 * spark.sparkContext.defaultParallelism)
+    n_rows = 10 * n_rg
+    tbl = pa.table({"doc_id": list(range(n_rows)), "text": ["x" * 2000] * n_rows})
     p = tmp_path / "documents.parquet"
     pq.write_table(tbl, p, row_group_size=10)
     assert _effective_scan_parallelism(str(tmp_path), "documents") == n_rg
@@ -192,3 +194,81 @@ def test_spread_skips_already_splittable_inputs(spark, tmp_path):
     assert "Repartition" in plan2
     n = spread_partitions(spark, p.stat().st_size)
     assert 2 <= n <= spark.sparkContext.defaultParallelism * 3
+
+
+def test_merge_resolve_plan_combines_before_key_exchange(
+    spark, tmp_path, monkeypatch
+):
+    """The hot-key defense and the single event projection, pinned on
+    the plan ``merge_batch`` hands to ``_write_files``: for plain and
+    patch tables, with and without salting, a ``partial_max`` sits
+    below the ``doc_id`` exchange (map-side combine), and a patch
+    table's merge reads its input once (one projection maps every
+    I/U/D/P event to its storage row — no union of two scans)."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from ml_data_pipeline_spark.lake.table import LakeTable
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("n", T.LongType()),
+        ]
+    )
+    src = str(tmp_path / "events")
+    spark.createDataFrame(
+        [
+            ("I", 1, "a", "x", 1),
+            ("U", 2, "a", "y", 2),
+            ("P", 3, "a", None, 9),
+            ("D", 4, "b", None, None),
+        ],
+        "op string, seq long, doc_id string, text string, n long",
+    ).write.parquet(src)
+
+    plans = {}
+    write_files = LakeTable._write_files
+
+    def capture(self, df, kind, snap=None):
+        if kind == "delta":
+            plans[self.root] = _plan(df)
+        return write_files(self, df, kind, snap)
+
+    monkeypatch.setattr(LakeTable, "_write_files", capture)
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for patch in (False, True):
+        for salt in (None, 8):
+            t = LakeTable.create(
+                spark,
+                str(tmp_path / f"t-{patch}-{salt}"),
+                schema,
+                "doc_id",
+                n_buckets=4,
+                properties={"patch.enabled": "true"} if patch else None,
+            )
+            ev = spark.read.parquet(src)
+            if not patch:
+                ev = ev.where("op != 'P'")
+            t.merge_batch(ev, batch_id=0, salt=salt)
+            plan = plans[t.root]
+            lines = plan.splitlines()
+            at = [
+                i
+                for i, ln in enumerate(lines)
+                if re.search(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", ln)
+            ]
+            assert len(at) == 1, (patch, salt, plan)
+            below = []
+            for ln in lines[at[0] + 1 :]:
+                if depth(ln) <= depth(lines[at[0]]):
+                    break
+                below.append(ln)
+            assert any("partial_max" in ln for ln in below), (patch, salt, plan)
+            if patch:
+                assert plan.count("FileScan") == 1, (salt, plan)
